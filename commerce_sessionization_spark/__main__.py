@@ -25,6 +25,11 @@ from datetime import datetime, timedelta
 
 from commerce_sessionization_spark.session import get_spark
 
+NO_SORT_HELP = (
+    "skip the per-file time sort of each hour's output (it rides on the "
+    "job's one shuffle and costs almost nothing; there is no global sort)"
+)
+
 
 def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--path", required=True, help="pipeline base dir (logs/ + sessions/)")
@@ -48,17 +53,13 @@ def main(argv: list[str] | None = None) -> int:
     s = sub.add_parser("sessionize", help="EP1: one incremental hour")
     s.add_argument("--date", required=True, help="event_date YYYY-MM-DD")
     s.add_argument("--hour", required=True, help="event_hour HH")
-    s.add_argument(
-        "--no-sort",
-        action="store_true",
-        help="skip the reference's global output sort (recommended at scale)",
-    )
+    s.add_argument("--no-sort", action="store_true", help=NO_SORT_HELP)
     _add_common(s)
 
     b = sub.add_parser("backfill", help="ordered EP1 over an hour range")
     b.add_argument("--start", required=True, help='"YYYY-MM-DD HH" first hour')
     b.add_argument("--end", required=True, help='"YYYY-MM-DD HH" last hour (inclusive)')
-    b.add_argument("--no-sort", action="store_true")
+    b.add_argument("--no-sort", action="store_true", help=NO_SORT_HELP)
     _add_common(b)
 
     st = sub.add_parser(

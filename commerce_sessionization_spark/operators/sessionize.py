@@ -5,8 +5,9 @@ the deprecated UDF variant ``SessionizationUdf.scala:10-13`` is intentionally
 NOT ported — it materializes whole user histories via collect_list and breaks
 codegen). All logic is declarative window functions: one window spec over
 ``(user_id, event_timestamp)`` carries the lag-gap, boundary seeding, and
-forward fill in a single exchange+sort; the prev-active selection is a second
-window over ``(session_id, event_timestamp desc)``.
+forward fill in a single exchange+sort. The hourly job feeds every prev-hour
+row inside the 30-min carry window straight into that window, so its whole
+plan is one ``hashpartitioning(user_id)`` exchange feeding the write.
 
 Session rule: a user's events ≤ 30 min apart share a session; a gap > 1800 s
 starts a new one (``SessionizationBuiltIn.scala:12``). Session ids are
@@ -17,16 +18,19 @@ change every id.
 
 Scale notes (100 TB): the per-user window shuffles once on ``user_id``
 (Catalyst collapses W1-W4 into one WindowExec); hot users are bounded by one
-hour of events + 1 carried row, so the sort is small per key. The final
-global ``sort(event_timestamp)`` (``SessionizationBuiltIn.scala:110``) is a
-range-exchange the big path does not need — keep ``sort_output=False`` there
-and let the partitioned write cluster instead.
+hour of events + their last 30 min of carried rows, so the sort is small per
+key. The reference's global ``sort(event_timestamp)``
+(``SessionizationBuiltIn.scala:110``) is a range exchange plus a sampling job;
+``sessionize_hour`` replaces it with a per-file time sort that rides on the
+window's partitioning (``augment_session_id`` keeps the global sort for
+reference parity).
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -68,6 +72,10 @@ def augment_session_id(
     4. forward-fill via ``last(ignorenulls)`` (W4)
     5. drop carried prev-hour rows; keep only the processed hour (P5)
     6. optional global sort by timestamp (O1) + drop transients (P8)
+
+    Carried rows may be one per session (``load_prev_active_sessions``) or
+    every row of the carry window (``carry_window``): all of a user's rows
+    in that window belong to one session, so either input gives the same ids.
     """
     if "session_id" not in df.columns:
         df = df.withColumn("session_id", F.lit(None).cast("string"))
@@ -112,23 +120,31 @@ def augment_session_id(
     )
 
 
+def carry_window(df: DataFrame, process_time: datetime) -> DataFrame:
+    """Prev-hour rows within 30 min of the processed hour's start.
+
+    The boundary is *inclusive* (``SessionizationBuiltIn.scala:129``): a row
+    at exactly HH-1:30:00 can still continue into hour HH.
+    """
+    cutoff = process_time - timedelta(seconds=SESSION_EXPIRED_SECONDS)
+    return df.filter(
+        F.to_timestamp("event_time", EVENT_TIME_FORMAT)
+        >= F.to_timestamp(F.lit(cutoff.strftime("%Y-%m-%d %H:%M:%S")))
+    )
+
+
 def load_prev_active_sessions(df: DataFrame, process_time: datetime) -> DataFrame:
     """One representative row per still-active prev-hour session.
 
-    Mirrors ``SessionizationBuiltIn.scala:117-134``: keep rows within 30 min
-    of the processed hour's start (boundary *inclusive*,
-    ``SessionizationBuiltIn.scala:129``), then per ``session_id`` keep only
-    the latest event (row_number desc, rank 1) — so the 30-min expiry is
-    measured from the session's last activity.
+    Mirrors ``SessionizationBuiltIn.scala:117-134``: keep the rows of the
+    carry window (``carry_window``), then per ``session_id`` keep only the
+    latest event (row_number desc, rank 1) — so the 30-min expiry is
+    measured from the session's last activity. ``sessionize_hour`` skips the
+    per-session dedupe and its extra exchange; see its docstring.
     """
-    cutoff = process_time - timedelta(seconds=SESSION_EXPIRED_SECONDS)
     w = Window.partitionBy("session_id").orderBy(F.desc("event_timestamp"))
     return (
-        with_event_timestamp(df)
-        .filter(
-            F.col("event_timestamp")
-            >= F.to_timestamp(F.lit(cutoff.strftime("%Y-%m-%d %H:%M:%S")))
-        )
+        with_event_timestamp(carry_window(df, process_time))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") == 1)
         .drop("rank", "event_timestamp")
@@ -147,9 +163,20 @@ def sessionize_hour(
 
     Reads hour t's behaviors from ``{base}/logs`` and hour t-1's *own output*
     from ``{base}/sessions`` (externalized state — the batch analogue of a
-    stream state store), unions still-active session representatives with the
-    new events, re-runs the window chain, and dynamic-overwrites hour t of
-    ``{base}/sessions``.
+    stream state store), unions the prev-hour rows of the carry window with
+    the new events, re-runs the window chain, and dynamic-overwrites hour t
+    of ``{base}/sessions``.
+
+    Unlike the reference, the carried rows are not first reduced to one per
+    session: timestamps are whole seconds and the carry window spans at most
+    1799 s, so all of a user's carried rows belong to one session (hour t-1
+    was written under the same gap rule), and the
+    row just before the user's first new event is the one the per-session
+    dedupe would keep. The ids are the same and the plan has a single
+    exchange, ``hashpartitioning(user_id)``. ``sort_output`` orders each
+    output file by time; the partition-column prefix of that sort satisfies
+    the write's required ordering, so Spark adds no sort of its own (which
+    would not keep the time order).
     """
     process_time = datetime.strptime(f"{event_date} {event_hour}", "%Y-%m-%d %H")
     prev_time = process_time - timedelta(hours=1)
@@ -164,13 +191,20 @@ def sessionize_hour(
             (F.col("event_date") == prev_time.strftime("%Y-%m-%d"))
             & (F.col("event_hour") == prev_time.strftime("%H"))
         )
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         # first hour ever: no sessions table yet → empty carry-in
         prev_sessions = spark.createDataFrame([], SESSION_SCHEMA)
-    prev_active = load_prev_active_sessions(prev_sessions, process_time)
 
-    unioned = prev_active.unionByName(behaviors, allowMissingColumns=True)
-    sessions = augment_session_id(unioned, process_time, sort_output=sort_output)
+    unioned = carry_window(prev_sessions, process_time).unionByName(
+        behaviors, allowMissingColumns=True
+    )
+    sessions = augment_session_id(unioned, process_time, sort_output=False)
+    if sort_output:
+        sessions = sessions.sortWithinPartitions(
+            "event_date", "event_hour", "event_time"
+        )
     if write:
         write_partitioned_parquet(
             sessions, f"{base_path}/sessions", cluster_before_write=False
