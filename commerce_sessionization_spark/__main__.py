@@ -23,12 +23,19 @@ import argparse
 import sys
 from datetime import datetime, timedelta
 
+from commerce_sessionization_spark.operators.sessions import DEFAULT_GAP_SECONDS
 from commerce_sessionization_spark.session import get_spark
 
 NO_SORT_HELP = (
     "skip the per-file time sort of each hour's output (it rides on the "
     "job's one shuffle and costs almost nothing; there is no global sort)"
 )
+
+
+def _gap_seconds(value: str) -> int:
+    if int(value) < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1 second, got {value}")
+    return int(value)
 
 
 def _add_common(p: argparse.ArgumentParser) -> None:
@@ -74,7 +81,10 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="keep running on new files (default drains the backlog and exits)",
     )
-    st.add_argument("--gap-seconds", type=int, default=1800)
+    st.add_argument(
+        "--gap-seconds", type=_gap_seconds, default=DEFAULT_GAP_SECONDS,
+        help="inactivity gap that splits a session (seconds, at least 1)",
+    )
     st.add_argument("--watermark", default="30 minutes")
     _add_common(st)
 

@@ -10,9 +10,10 @@ are pinned by tests instead of prose:
 
 1. **Gap resolution** — the UDF compares epoch-millisecond deltas
    against 1_800_000 ms (``SessionizationUdf.scala:16,68``); the
-   builtin compares ``unix_timestamp`` (whole-second) deltas against
-   1800. A 1800.5 s gap therefore SPLITS here and does NOT split in the
-   builtin — sub-second boundary behavior genuinely differs.
+   builtin compares µs deltas against 1800 s, but of timestamps parsed
+   from whole-second strings (``with_event_timestamp``). A 1800.5 s gap
+   SPLITS here; the builtin can never see one, so the sub-second regime
+   stays unreachable on the production path and the divergence latent.
 2. **Id preimage** — ``sha256("{user_id}-{epochMillis}")``
    (``SessionizationUdf.scala:111-121``) vs the builtin's string-
    rendered timestamp preimage: ids never match across paths even when

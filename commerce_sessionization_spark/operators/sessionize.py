@@ -5,9 +5,11 @@ the deprecated UDF variant ``SessionizationUdf.scala:10-13`` is intentionally
 NOT ported — it materializes whole user histories via collect_list and breaks
 codegen). All logic is declarative window functions: one window spec over
 ``(user_id, event_timestamp)`` carries the lag-gap, boundary seeding, and
-forward fill in a single exchange+sort. The hourly job feeds every prev-hour
-row inside the 30-min carry window straight into that window, so its whole
-plan is one ``hashpartitioning(user_id)`` exchange feeding the write.
+forward fill in a single exchange+sort; the gap rule is
+``operators.sessions._gap_rule``, shared with the generic operators. The
+hourly job feeds every prev-hour row inside the 30-min carry window straight
+into that window, so its whole plan is one ``hashpartitioning(user_id)``
+exchange feeding the write.
 
 Session rule: a user's events ≤ 30 min apart share a session; a gap > 1800 s
 starts a new one (``SessionizationBuiltIn.scala:12``). Session ids are
@@ -17,9 +19,9 @@ hence the engine pins ``spark.sql.session.timeZone=UTC``; any tz drift would
 change every id.
 
 Scale notes (100 TB): the per-user window shuffles once on ``user_id``
-(Catalyst collapses W1-W4 into one WindowExec); hot users are bounded by one
-hour of events + their last 30 min of carried rows, so the sort is small per
-key. The reference's global ``sort(event_timestamp)``
+(W1-W3 share one partitioning and ordering, so one exchange+sort); hot users
+are bounded by one hour of events + their last 30 min of carried rows, so the
+sort is small per key. The reference's global ``sort(event_timestamp)``
 (``SessionizationBuiltIn.scala:110``) is a range exchange plus a sampling job;
 ``sessionize_hour`` replaces it with a per-file time sort that rides on the
 window's partitioning (``augment_session_id`` keeps the global sort for
@@ -34,14 +36,15 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from commerce_sessionization_spark.operators.sessions import (
+    DEFAULT_GAP_SECONDS,
+    _gap_rule,
+)
 from commerce_sessionization_spark.schemas import BEHAVIOR_SCHEMA, SESSION_SCHEMA
 from commerce_sessionization_spark.sources.io import (
     read_parquet,
     write_partitioned_parquet,
 )
-
-#: 30-minute inactivity gap, seconds (``SessionizationBuiltIn.scala:12``).
-SESSION_EXPIRED_SECONDS = 30 * 60
 
 #: Stored event_time format (``SessionizationBuiltIn.scala:82-85``).
 EVENT_TIME_FORMAT = "yyyy-MM-dd HH:mm:ss 'UTC'"
@@ -66,12 +69,14 @@ def augment_session_id(
 
     Mirrors ``SessionizationBuiltIn.scala:68-113``:
 
-    1. gap to the user's previous event via ``lag`` (W1)
-    2. gaps > 1800 s → NULL boundary marker (W2)
-    3. seed ids: keep carried id / mint sha2 at boundaries / NULL (W3)
-    4. forward-fill via ``last(ignorenulls)`` (W4)
-    5. drop carried prev-hour rows; keep only the processed hour (P5)
-    6. optional global sort by timestamp (O1) + drop transients (P8)
+    1. boundary: the user's first row or a gap > 1800 s after ``lag`` (W1)
+    2. seed ids: keep carried id / mint sha2 at boundaries / NULL (W2)
+    3. forward-fill via ``last(ignorenulls)`` (W3)
+    4. drop carried prev-hour rows; keep only the processed hour (P5)
+    5. optional global sort by timestamp (O1) + drop transients (P8)
+
+    The reference compares ``unix_timestamp`` seconds; W1 compares µs.
+    ``event_timestamp`` is parsed from whole seconds, so the two agree.
 
     Carried rows may be one per session (``load_prev_active_sessions``) or
     every row of the carry window (``carry_window``): all of a user's rows
@@ -80,34 +85,18 @@ def augment_session_id(
     if "session_id" not in df.columns:
         df = df.withColumn("session_id", F.lit(None).cast("string"))
 
-    w = Window.partitionBy("user_id").orderBy("event_timestamp")
-
     df = with_event_timestamp(df)
-    time_diff = F.unix_timestamp("event_timestamp") - F.unix_timestamp(
-        F.lag("event_timestamp", 1).over(w)
-    )
-    df = df.withColumn(
-        "time_diff",
-        F.when(time_diff > SESSION_EXPIRED_SECONDS, F.lit(None)).otherwise(time_diff),
-    )
-    # W3: carried ids win; a NULL gap (first event or >30-min boundary) mints
-    # a fresh id from the *string-rendered* timestamp (UTC session tz).
-    df = df.withColumn(
-        "session_id",
-        F.when(F.col("session_id").isNotNull(), F.col("session_id"))
-        .when(
-            F.col("time_diff").isNull(),
-            F.sha2(F.concat_ws("-", "user_id", "event_timestamp"), 256),
-        )
-        .otherwise(F.lit(None)),
-    )
-    # W4: propagate the session's id down to its remaining events.
-    df = df.withColumn(
-        "session_id",
-        F.last("session_id", ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = Window.partitionBy("user_id").orderBy("event_timestamp")
+    boundary, fill = _gap_rule(w, "event_timestamp", DEFAULT_GAP_SECONDS)
+    # W2: carried ids win; a boundary mints a fresh id from the
+    # *string-rendered* timestamp (UTC session tz). W3 fills it forward.
+    seed = F.coalesce(
+        F.col("session_id"),
+        F.when(
+            boundary, F.sha2(F.concat_ws("-", "user_id", "event_timestamp"), 256)
         ),
     )
+    df = df.withColumn("session_id", fill(seed))
     # P5: carried-in prev-hour carrier rows are excluded from output.
     df = df.filter(
         (F.col("event_date") == process_time.strftime("%Y-%m-%d"))
@@ -115,7 +104,7 @@ def augment_session_id(
     )
     if sort_output:
         df = df.sort("event_timestamp")
-    return df.drop("event_timestamp", "time_diff").select(
+    return df.drop("event_timestamp").select(
         *[f.name for f in SESSION_SCHEMA.fields]
     )
 
@@ -126,7 +115,7 @@ def carry_window(df: DataFrame, process_time: datetime) -> DataFrame:
     The boundary is *inclusive* (``SessionizationBuiltIn.scala:129``): a row
     at exactly HH-1:30:00 can still continue into hour HH.
     """
-    cutoff = process_time - timedelta(seconds=SESSION_EXPIRED_SECONDS)
+    cutoff = process_time - timedelta(seconds=DEFAULT_GAP_SECONDS)
     return df.filter(
         F.to_timestamp("event_time", EVENT_TIME_FORMAT)
         >= F.to_timestamp(F.lit(cutoff.strftime("%Y-%m-%d %H:%M:%S")))

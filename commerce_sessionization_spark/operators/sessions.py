@@ -9,7 +9,9 @@ second-rendered string preimage can collide for two sessions of one user
 starting within the same second).
 
 Everything is built-ins inside one window spec → a single shuffle on the
-user column and whole-stage codegen throughout; no UDFs.
+user column and whole-stage codegen throughout; no UDFs. The gap rule is
+written twice, once per execution model: ``_gap_rule`` (window columns) and
+``_sweep`` (the Python loop of ``sessionize_capped`` and the stream).
 
 Scale notes: state per user is just the running session-start — WindowExec
 sorts within each user partition and spills if needed. For skewed users at
@@ -20,10 +22,73 @@ the hourly pipeline does, or use the streaming variant
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import hashlib
+import math
+from collections.abc import Callable, Iterable
+from typing import Any
+
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+#: Inactivity gap that splits a session, seconds
+#: (``SessionizationBuiltIn.scala:12``).
 DEFAULT_GAP_SECONDS = 30 * 60
+
+
+def _gap_rule(
+    w: WindowSpec, ts_col: str, gap_seconds: int
+) -> tuple[Column, Callable[[Column], Column]]:
+    """The gap rule as window columns over ``w`` (one user, time-ordered).
+
+    Returns ``(boundary, fill)``: ``boundary`` is true on the window's first
+    row and on a row more than ``gap_seconds`` after the previous one;
+    ``fill(c)`` is the last non-null ``c`` from the window's start to the
+    current row. Gaps compare in µs, exact for any timestamp precision.
+    """
+    prev = F.lag(ts_col, 1).over(w)
+    gap_us = F.unix_micros(F.col(ts_col)) - F.unix_micros(prev)
+    boundary = prev.isNull() | (gap_us > gap_seconds * 1_000_000)
+    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+    def fill(c: Column) -> Column:
+        return F.last(c, ignorenulls=True).over(frame)
+
+    return boundary, fill
+
+
+def _session_id(user: Column, start: Column) -> Column:
+    """sha256("{user}-{epoch_micros(start)}"), the column form of ``_mint_id``."""
+    return F.sha2(F.concat_ws("-", user, F.unix_micros(start)), 256)
+
+
+def _mint_id(user: Any, start_us: int) -> str:
+    """sha256("{user}-{start_us}"), the Python form of ``_session_id``."""
+    return hashlib.sha256(f"{user}-{start_us}".encode()).hexdigest()
+
+
+def _sweep(
+    ts_us: Iterable[int],
+    gap_us: int,
+    cap_us: int | None = None,
+    state: tuple[int, int] | None = None,
+) -> tuple[list[int], tuple[int, int]]:
+    """The gap rule over one user's sorted µs timestamps, in Python.
+
+    A row starts a session when it is the first, lies more than ``gap_us``
+    after the previous row, or (with ``cap_us``) more than ``cap_us`` after
+    the session's start. ``state`` is a ``(start, last)`` pair carried from
+    an earlier batch of the same user. Returns each row's session start and
+    the final ``(start, last)``.
+    """
+    start, last = state if state is not None else (None, None)
+    cap = math.inf if cap_us is None else cap_us
+    starts = []
+    for t in ts_us:
+        if last is None or t - last > gap_us or t - start > cap:
+            start = t
+        last = t
+        starts.append(start)
+    return starts, (start, last)
 
 
 def sessionize(
@@ -42,21 +107,10 @@ def sessionize(
 
     id = sha256("{user}-{epoch_micros(first event ts of the session)}").
     """
-    order = [ts_col, *order_cols]
-    w = Window.partitionBy(user_col).orderBy(*order)
-    wfill = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    prev_ts = F.lag(ts_col, 1).over(w)
-    gap_us = F.unix_micros(F.col(ts_col)) - F.unix_micros(prev_ts)
-    is_boundary = prev_ts.isNull() | (gap_us > gap_seconds * 1_000_000)
-
-    session_start = F.last(
-        F.when(is_boundary, F.col(ts_col)), ignorenulls=True
-    ).over(wfill)
-    session_id = F.sha2(
-        F.concat_ws("-", F.col(user_col), F.unix_micros(session_start)), 256
-    )
-    return df.withColumn(id_col, session_id)
+    w = Window.partitionBy(user_col).orderBy(ts_col, *order_cols)
+    boundary, fill = _gap_rule(w, ts_col, gap_seconds)
+    start = fill(F.when(boundary, F.col(ts_col)))
+    return df.withColumn(id_col, _session_id(F.col(user_col), start))
 
 
 def sessionize_bucketed(
@@ -96,14 +150,8 @@ def sessionize_bucketed(
     work = df.withColumn("_b", F.floor(t / F.lit(bucket_us)).cast("long"))
 
     w1 = Window.partitionBy(user_col, "_b").orderBy(ts_col, *order_cols)
-    prev = F.lag(ts_col, 1).over(w1)
-    boundary = prev.isNull() | ((t - F.unix_micros(prev)) > gap_us)
-    work = work.withColumn(
-        "_tstart",
-        F.last(F.when(boundary, F.col(ts_col)), ignorenulls=True).over(
-            w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    boundary, fill = _gap_rule(w1, ts_col, gap_seconds)
+    work = work.withColumn("_tstart", fill(F.when(boundary, F.col(ts_col))))
 
     summ = work.groupBy(user_col, "_b").agg(
         F.min(ts_col).alias("_first_ts"),
@@ -116,6 +164,22 @@ def sessionize_bucketed(
     # bucket's true last-session start + its last event ts. A bucket's first
     # session merges iff the cross-boundary gap fits; the chain's start keeps
     # flowing through single-session buckets.
+    def step(acc: Column, s: Column) -> Column:
+        joins = acc["prev_ts"].isNotNull() & (
+            F.unix_micros(s["_first_ts"]) - F.unix_micros(acc["prev_ts"]) <= gap_us
+        )
+        fixed = F.when(joins, acc["prev_start"]).otherwise(s["_first_ts"])
+        return F.struct(
+            F.concat(
+                acc["out"],
+                F.array(F.struct(s["_b"].alias("b"), fixed.alias("fixed_start"))),
+            ).alias("out"),
+            F.when((s["_nsess"] == 1) & joins, acc["prev_start"])
+            .otherwise(s["_last_start"])
+            .alias("prev_start"),
+            s["_last_ts"].alias("prev_ts"),
+        )
+
     chain = (
         summ.groupBy(user_col)
         .agg(
@@ -136,44 +200,7 @@ def sessionize_bucketed(
                     F.lit(None).cast("timestamp").alias("prev_start"),
                     F.lit(None).cast("timestamp").alias("prev_ts"),
                 ),
-                lambda acc, s: F.struct(
-                    F.concat(
-                        acc["out"],
-                        F.array(
-                            F.struct(
-                                s["_b"].alias("b"),
-                                F.when(
-                                    acc["prev_ts"].isNotNull()
-                                    & (
-                                        (
-                                            F.unix_micros(s["_first_ts"])
-                                            - F.unix_micros(acc["prev_ts"])
-                                        )
-                                        <= gap_us
-                                    ),
-                                    acc["prev_start"],
-                                )
-                                .otherwise(s["_first_ts"])
-                                .alias("fixed_start"),
-                            )
-                        ),
-                    ).alias("out"),
-                    F.when(
-                        (s["_nsess"] == 1)
-                        & acc["prev_ts"].isNotNull()
-                        & (
-                            (
-                                F.unix_micros(s["_first_ts"])
-                                - F.unix_micros(acc["prev_ts"])
-                            )
-                            <= gap_us
-                        ),
-                        acc["prev_start"],
-                    )
-                    .otherwise(s["_last_start"])
-                    .alias("prev_start"),
-                    s["_last_ts"].alias("prev_ts"),
-                ),
+                step,
                 lambda acc: acc["out"],
             ).alias("_fixes"),
         )
@@ -195,15 +222,7 @@ def sessionize_bucketed(
             F.when(F.col("_tstart") == first_of_bucket, F.col("_fixed_start"))
             .otherwise(F.col("_tstart")),
         )
-        .withColumn(
-            id_col,
-            F.sha2(
-                F.concat_ws(
-                    "-", F.col(user_col), F.unix_micros(F.col("_start"))
-                ),
-                256,
-            ),
-        )
+        .withColumn(id_col, _session_id(F.col(user_col), F.col("_start")))
         .drop("_b", "_tstart", "_fixed_start", "_start")
     )
     return out
@@ -262,8 +281,6 @@ def sessionize_capped(
     operator, which is exactly how the Pandas path is oracle-checked
     (``capped_sessionize_parity`` + ``tests/test_sessions_capped.py``).
     """
-    import hashlib
-
     import pandas as pd
 
     from pyspark.sql.types import StringType, StructField, StructType
@@ -281,20 +298,8 @@ def sessionize_capped(
         # naive timestamps are session-tz (UTC) wall time == epoch micros
         ts_us = pdf[ts_col].astype("datetime64[us]").astype("int64")
         user = pdf[user_col].iloc[0]
-        ids = []
-        start = prev = None
-        for t in ts_us:
-            if (
-                start is None
-                or (t - prev) > gap_us
-                or (cap_us is not None and (t - start) > cap_us)
-            ):
-                start = t
-            prev = t
-            ids.append(
-                hashlib.sha256(f"{user}-{start}".encode()).hexdigest()
-            )
-        pdf[id_col] = ids
+        starts, _ = _sweep(ts_us, gap_us, cap_us)
+        pdf[id_col] = [_mint_id(user, s) for s in starts]
         return pdf
 
     return df.groupBy(user_col).applyInPandas(assign, schema=out_schema)

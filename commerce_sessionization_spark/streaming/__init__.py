@@ -4,7 +4,10 @@ The reference's incrementality is Airflow-driven hourly micro-batching
 (``airflow/dags/sessionization_batch.py:12,36-39``); this package is the
 stream-native equivalent per SURVEY §2.8/§7.2: ``session_window`` gap
 aggregation with watermarked late-data handling, and a stateful per-event
-variant whose session ids are byte-identical to the batch operator.
+variant whose session ids are byte-identical to the batch operator. That
+variant is the package's one arbitrary-state operator and runs on
+``applyInPandasWithState``: a per-user update function over one
+``(start, last)`` state row.
 """
 
 from commerce_sessionization_spark.streaming.cdc_stream import (
@@ -21,9 +24,6 @@ from commerce_sessionization_spark.streaming.sessionize_stream import (
     sessionize_stream_stateful,
     sessionize_stream_window,
 )
-from commerce_sessionization_spark.streaming.sessionize_tws import (
-    sessionize_stream_tws,
-)
 from commerce_sessionization_spark.streaming.windows import windowed_counts
 
 __all__ = [
@@ -34,7 +34,6 @@ __all__ = [
     "enrich_stream",
     "read_events_stream",
     "sessionize_stream_stateful",
-    "sessionize_stream_tws",
     "sessionize_stream_window",
     "windowed_counts",
 ]

@@ -13,7 +13,10 @@ Two formulations of the 30-minute-gap rule on an unbounded stream:
   backfill and live stream output without id drift. This is the stream
   analogue of the reference's sessions-table carry-in
   (``SessionizationBuiltIn.scala:46-52``): state the batch job externalizes
-  to parquet lives in the state store instead.
+  to parquet lives in the state store instead. The per-user update is the
+  shared ``operators.sessions._sweep`` (the loop ``sessionize_capped`` runs)
+  resumed from that state, and ``applyInPandasWithState`` is the only
+  arbitrary-state API the package uses.
 
 Scale notes (100 TB/day): state is O(#active users) × 16 bytes — tens of GB
 across 1000 executors at billions of users, well inside RocksDB state-store
@@ -30,7 +33,6 @@ disorder beyond the watermark is dropped by design.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 from typing import Any
 
@@ -47,7 +49,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from commerce_sessionization_spark.operators.sessions import DEFAULT_GAP_SECONDS
+from commerce_sessionization_spark.operators.sessions import (
+    DEFAULT_GAP_SECONDS,
+    _mint_id,
+    _sweep,
+)
 
 #: Events-stream wire schema (matches the testdata ``events`` table's core).
 EVENT_STREAM_SCHEMA = StructType(
@@ -103,12 +109,6 @@ def sessionize_stream_window(
     )
 
 
-def _mint_id(user: Any, start_us: int) -> str:
-    # identical preimage to operators.sessions.sessionize:
-    # sha2(concat_ws("-", user, unix_micros(session_start)), 256)
-    return hashlib.sha256(f"{user}-{start_us}".encode()).hexdigest()
-
-
 def _make_session_fn(ts_col: str, gap_us: int, out_cols: list[str]):
     def assign_sessions(
         key: tuple,
@@ -119,8 +119,6 @@ def _make_session_fn(ts_col: str, gap_us: int, out_cols: list[str]):
             state.remove()
             return
         (user,) = key
-        start_us, last_us = state.get if state.exists else (None, None)
-
         batch = pd.concat(list(pdfs), ignore_index=True)
         if batch.empty:
             return
@@ -136,13 +134,10 @@ def _make_session_fn(ts_col: str, gap_us: int, out_cols: list[str]):
         batch = batch.sort_values(ts_col, kind="mergesort", ignore_index=True)
         ts_us = (batch[ts_col].astype("int64") // 1000).to_numpy()
 
-        ids = []
-        for t in ts_us:
-            if last_us is None or t - last_us > gap_us:
-                start_us = t
-            last_us = t
-            ids.append(_mint_id(user, start_us))
-        batch["session_id"] = ids
+        starts, (start_us, last_us) = _sweep(
+            ts_us, gap_us, state=state.get if state.exists else None
+        )
+        batch["session_id"] = [_mint_id(user, s) for s in starts]
 
         state.update((int(start_us), int(last_us)))
         # evict once the watermark passes last_seen + gap: from then on any

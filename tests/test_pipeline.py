@@ -847,3 +847,25 @@ def test_cli_drift_subcommand():
     assert run.returncode == 0, run.stderr[-500:]
     assert "o_totalprice" in run.stdout and "o_custkey" in run.stdout
     assert "|0.0" in run.stdout.replace(" ", "")  # zero drift rendered
+
+
+@pytest.mark.parametrize("gap", ["0", "-60"])
+def test_cli_stream_rejects_gap_below_one_second(tmp_path, gap):
+    """`stream --gap-seconds` below 1 is an argparse error (exit 2) before
+    any Spark session starts: a negative gap would make every event its own
+    session and arm each eviction timer behind the user's last event."""
+    import subprocess
+    import sys as _sys
+    from pathlib import Path
+
+    run = subprocess.run(
+        [_sys.executable, "-m", "commerce_sessionization_spark", "stream",
+         "--source", str(tmp_path / "drops" / "*.parquet"),
+         "--checkpoint", str(tmp_path / "ckpt"), "--path", str(tmp_path / "out"),
+         "--gap-seconds", gap],
+        capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parent.parent,
+    )
+    assert run.returncode == 2, run.stderr[-500:]
+    assert "--gap-seconds" in run.stderr and "at least 1" in run.stderr
+    assert not (tmp_path / "ckpt").exists() and not (tmp_path / "out").exists()

@@ -23,7 +23,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from commerce_sessionization_spark.operators.sessions import sessionize
+from commerce_sessionization_spark.operators.sessions import (
+    _mint_id,
+    _sweep,
+    sessionize,
+    sessionize_bucketed,
+    sessionize_capped,
+)
 
 SCHEMA = StructType(
     [
@@ -108,6 +114,71 @@ def test_sessionize_properties(spark, traffic, seed):
         (sid,) = ids
         assert sid not in ids_seen or ids_seen[sid] == key, "id collision"
         ids_seen[sid] = key
+
+    # differential: the bucketed (1-hour buckets, so sessions cross them) and
+    # the uncapped pandas paths give every event the same id as sessionize,
+    # hence the same partition as the reference sweep
+    want = {r.event_id: r.session_id for r in got}
+    for other in (
+        sessionize_bucketed(
+            df, gap_seconds=GAP, bucket_hours=1, order_cols=("event_id",)
+        ),
+        sessionize_capped(
+            df, gap_seconds=GAP, cap_seconds=None, order_cols=("event_id",)
+        ),
+    ):
+        assert {r.event_id: r.session_id for r in other.collect()} == want
+
+
+def _epoch_us(t: datetime) -> int:
+    return int((t - datetime(1970, 1, 1)).total_seconds()) * 1_000_000
+
+
+def _user_timelines(traffic):
+    """user → (event ids, µs timestamps), each user's events in time order."""
+    out: dict[int, tuple[list, list]] = {}
+    for eid, user, t in materialize(traffic):
+        eids, ts = out.setdefault(user, ([], []))
+        eids.append(eid)
+        ts.append(_epoch_us(t))
+    return out
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    traffic=traffic_strategy,
+    cuts=st.sets(st.integers(min_value=1, max_value=11), max_size=5),
+)
+def test_sweep_resumes_across_micro_batches(traffic, cuts):
+    """The shared per-user sweep, fed one user's timeline in micro-batches
+    with the (start, last) state carried between them — the streaming state
+    function's loop — mints every event the id of its reference session
+    start, wherever the batches are cut."""
+    exp = expected_partition(materialize(traffic))
+    for user, (eids, ts) in _user_timelines(traffic).items():
+        bounds = [0, *sorted(c for c in cuts if c < len(ts)), len(ts)]
+        state, ids = None, []
+        for lo, hi in zip(bounds, bounds[1:]):
+            starts, state = _sweep(ts[lo:hi], GAP * 1_000_000, state=state)
+            ids += [_mint_id(user, s) for s in starts]
+        assert ids == [_mint_id(user, _epoch_us(exp[e][1])) for e in eids]
+        assert state == (_epoch_us(exp[eids[-1]][1]), ts[-1])
+
+
+@settings(max_examples=200, deadline=None)
+@given(traffic=traffic_strategy, cap=st.integers(min_value=1, max_value=3 * GAP))
+def test_sweep_cap_bounds_every_session(traffic, cap):
+    """With a cap, the sweep still splits at every gap > GAP, keeps each
+    session within ``cap`` of its start, and opens a session only where the
+    gap or the cap forces one."""
+    gap_us, cap_us = GAP * 1_000_000, cap * 1_000_000
+    for _, ts in _user_timelines(traffic).values():
+        starts, _ = _sweep(ts, gap_us, cap_us)
+        assert starts[0] == ts[0]
+        for i in range(1, len(ts)):
+            forced = ts[i] - ts[i - 1] > gap_us or ts[i] - starts[i - 1] > cap_us
+            assert (starts[i] == ts[i]) == forced
+            assert ts[i] - starts[i] <= cap_us
 
 
 # --------------------------------------------------------------------------
