@@ -26,11 +26,6 @@ from datetime import datetime, timedelta
 from commerce_sessionization_spark.operators.sessions import DEFAULT_GAP_SECONDS
 from commerce_sessionization_spark.session import get_spark
 
-NO_SORT_HELP = (
-    "skip the per-file time sort of each hour's output (it rides on the "
-    "job's one shuffle and costs almost nothing; there is no global sort)"
-)
-
 
 def _gap_seconds(value: str) -> int:
     if int(value) < 1:
@@ -60,13 +55,11 @@ def main(argv: list[str] | None = None) -> int:
     s = sub.add_parser("sessionize", help="EP1: one incremental hour")
     s.add_argument("--date", required=True, help="event_date YYYY-MM-DD")
     s.add_argument("--hour", required=True, help="event_hour HH")
-    s.add_argument("--no-sort", action="store_true", help=NO_SORT_HELP)
     _add_common(s)
 
     b = sub.add_parser("backfill", help="ordered EP1 over an hour range")
     b.add_argument("--start", required=True, help='"YYYY-MM-DD HH" first hour')
     b.add_argument("--end", required=True, help='"YYYY-MM-DD HH" last hour (inclusive)')
-    b.add_argument("--no-sort", action="store_true", help=NO_SORT_HELP)
     _add_common(b)
 
     st = sub.add_parser(
@@ -362,17 +355,19 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name=f"csz-{args.cmd}", master=args.master)
     try:
         if args.cmd == "divide":
-            from commerce_sessionization_spark.operators import divide_file
+            from commerce_sessionization_spark.operators.ingest import divide_file
 
             divide_file(spark, args.input, args.path, shift_days=args.shift_days)
         elif args.cmd == "sessionize":
-            from commerce_sessionization_spark.operators import sessionize_hour
-
-            sessionize_hour(
-                spark, args.date, args.hour, args.path, sort_output=not args.no_sort
+            from commerce_sessionization_spark.operators.sessionize import (
+                sessionize_hour,
             )
+
+            sessionize_hour(spark, args.date, args.hour, args.path)
         elif args.cmd == "backfill":
-            from commerce_sessionization_spark.operators import sessionize_hour
+            from commerce_sessionization_spark.operators.sessionize import (
+                sessionize_hour,
+            )
 
             t = datetime.strptime(args.start, "%Y-%m-%d %H")
             end = datetime.strptime(args.end, "%Y-%m-%d %H")
@@ -380,11 +375,7 @@ def main(argv: list[str] | None = None) -> int:
                 top.error("--end before --start")
             while t <= end:
                 sessionize_hour(
-                    spark,
-                    t.strftime("%Y-%m-%d"),
-                    t.strftime("%H"),
-                    args.path,
-                    sort_output=not args.no_sort,
+                    spark, t.strftime("%Y-%m-%d"), t.strftime("%H"), args.path
                 )
                 t += timedelta(hours=1)
         elif args.cmd == "stream":
@@ -860,7 +851,10 @@ def main(argv: list[str] | None = None) -> int:
         elif args.cmd == "media-features":
             from pyspark.sql import functions as F
 
-            from commerce_sessionization_spark.operators import (
+            from commerce_sessionization_spark.operators.multimodal import (
+                DECODABLE_AUDIO_MIMES,
+                DECODABLE_IMAGE_MIMES,
+                DECODABLE_VIDEO_MIMES,
                 extract_audio_features,
                 extract_audio_mfcc,
                 extract_container_metadata,
@@ -869,12 +863,7 @@ def main(argv: list[str] | None = None) -> int:
                 extract_video_frame_features,
                 sample_video_frames,
             )
-            from commerce_sessionization_spark.operators.multimodal import (
-                DECODABLE_AUDIO_MIMES,
-                DECODABLE_IMAGE_MIMES,
-                DECODABLE_VIDEO_MIMES,
-            )
-            from commerce_sessionization_spark.sources import read_media_dir
+            from commerce_sessionization_spark.sources.io import read_media_dir
 
             media = read_media_dir(spark, args.path, glob=args.glob)
             media.persist()
@@ -927,7 +916,7 @@ def main(argv: list[str] | None = None) -> int:
                         .parquet(f"{args.out}/video_frame_samples")
                     wrote += ["video_frame_features", "video_frame_samples"]
                 if args.modality in ("all", "document") and not args.fake:
-                    from commerce_sessionization_spark.operators import (
+                    from commerce_sessionization_spark.operators.multimodal import (
                         extract_document_text,
                     )
 
@@ -938,7 +927,7 @@ def main(argv: list[str] | None = None) -> int:
                 if args.near_dups:
                     from pyspark.sql import functions as F
 
-                    from commerce_sessionization_spark.operators import (
+                    from commerce_sessionization_spark.operators.multimodal import (
                         phash_near_dup_pairs,
                     )
 

@@ -1,17 +1,2 @@
-from commerce_sessionization_spark.functions.vectors import (
-    cosine_similarity,
-    dot_product,
-    l2_norm,
-)
-from commerce_sessionization_spark.functions.hashing import (
-    hex_to_long,
-    stable_long_hash,
-)
-
-__all__ = [
-    "cosine_similarity",
-    "dot_product",
-    "l2_norm",
-    "hex_to_long",
-    "stable_long_hash",
-]
+"""Reusable column expressions and codecs (vectors, hashing, media decoders,
+document and archive parsers); import each from its defining module."""

@@ -1,374 +1,13 @@
-from commerce_sessionization_spark.operators.sessionize import (
-    augment_session_id,
-    load_prev_active_sessions,
-    sessionize_hour,
-)
-from commerce_sessionization_spark.operators.sessions import (
-    session_stats,
-    sessionize,
-    sessionize_capped,
-)
-from commerce_sessionization_spark.operators.ingest import divide_file
-from commerce_sessionization_spark.operators.dedup import (
-    cdc_chunk_dedup,
-    cdc_chunks,
-    exact_dedup,
-    exact_substring_decontaminate,
-    exact_substring_dedup,
-    incremental_exact_dedup,
-    minhash_lsh_dedup_pairs,
-    ngram_jaccard_pairs,
-    prefix_jaccard_pairs,
-    segment_dedup,
-    simhash_dedup_candidates,
-    simhash_table,
-)
-from commerce_sessionization_spark.operators.sampling import (
-    hash_split,
-    leakage_safe_split,
-    mixture_waterfill,
-)
-from commerce_sessionization_spark.operators.sketches import (
-    bottomk_sample,
-    cms_join_size_estimate,
-    count_min_cells,
-    count_min_estimates,
-    grouped_histogram_quantiles,
-    histogram_quantiles,
-    histogram_sketch,
-    sample_quantiles,
-)
-from commerce_sessionization_spark.operators.joins import (
-    asof_join,
-    bloom_filtered_join,
-    range_join,
-    salted_join,
-)
-from commerce_sessionization_spark.operators.similarity import (
-    all_pairs_topk,
-    brute_force_topk,
-    embedding_dedup_pairs,
-    hard_negatives,
-    ivf_assign,
-    ivf_search,
-    ivf_search_many,
-    mmr_rerank,
-    seed_centroids,
-    sq_bounds,
-    sq_encode,
-    sq_topk,
-)
-from commerce_sessionization_spark.operators.text import (
-    augment_word_dropout,
-    c4_line_filters,
-    clean_text,
-    cross_doc_span_stats,
-    encoding_quality,
-    gopher_quality_flags,
-    html_features,
-    language_id,
-    pii_scrub,
-    quality_score,
-    repetition_scores,
-    readability,
-    remove_boilerplate,
-    strip_html,
-    with_fingerprint,
-    with_text_stats,
-)
-from commerce_sessionization_spark.operators.decontam import (
-    decontaminate,
-    ngram_contamination,
-)
-from commerce_sessionization_spark.operators.basket import (
-    association_rules,
-)
-from commerce_sessionization_spark.operators.crawl import (
-    crawl_to_corpus,
-    extract_links,
-)
-from commerce_sessionization_spark.operators.robots import (
-    filter_by_robots,
-    parse_robots_df,
-    sitemaps_from_robots,
-)
-from commerce_sessionization_spark.operators.sitemaps import (
-    parse_sitemaps,
-    sitemap_frontier_candidates,
-)
-from commerce_sessionization_spark.operators.urls import (
-    canonical_url,
-    dedup_by_canonical_url,
-    url_parts,
-)
-from commerce_sessionization_spark.operators.bpe import (
-    bpe_segment,
-    bpe_train,
-)
-from commerce_sessionization_spark.operators.chunking import (
-    chunk_by_sentences,
-    chunk_documents,
-    pack_sequences,
-)
-from commerce_sessionization_spark.operators.entity import (
-    blocked_match_pairs,
-    passjoin_segments,
-)
-from commerce_sessionization_spark.operators.dq import (
-    check_rules,
-    blocking_key_audit,
-    data_drift_psi,
-    key_skew_stats,
-    observed_write,
-    profile_columns,
-)
-from commerce_sessionization_spark.operators.graph import (
-    hits,
-    k_core,
-    label_propagation,
-    pagerank,
-    shortest_paths,
-    triangle_counts,
-    weighted_shortest_paths,
-)
-from commerce_sessionization_spark.operators.timeseries import (
-    candles_from_state,
-    exp_smooth,
-    holt_smooth,
-    merge_ohlc,
-    ohlc_partial,
-    ohlc_resample,
-    time_bucket_gapfill,
-)
-from commerce_sessionization_spark.operators.ivm import (
-    apply_delta_z,
-    as_zset,
-    join_delta,
-    join_delta_z,
-    maintain_join,
-    merge_zset_aggregates,
-    zset_aggregate,
-    zset_normalize,
-)
-from commerce_sessionization_spark.operators.privacy import (
-    dp_noisy_counts,
-    k_anonymity_report,
-    k_anonymize,
-    l_diversity_report,
-    laplace_noise,
-)
-from commerce_sessionization_spark.operators.pq import (
-    pq_adc_multi,
-    pq_adc_topk,
-    pq_codebook,
-    pq_encode,
-)
-from commerce_sessionization_spark.operators.multimodal import (
-    detect_scene_cuts,
-    extract_audio_features,
-    extract_audio_mfcc,
-    extract_audio_spectral,
-    extract_container_metadata,
-    extract_document_text,
-    extract_image_features,
-    extract_image_metadata,
-    extract_video_frame_features,
-    media_metadata_stats,
-    phash_near_dup_pairs,
-    resize_images,
-    sample_video_frames,
-    standardize_audio,
-)
-from commerce_sessionization_spark.operators.layout import (
-    global_rank,
-    shard_assignment,
-    shard_manifest,
-    write_shards,
-    write_zordered,
-    zorder_key,
-)
-from commerce_sessionization_spark.operators.ml import (
-    apply_linear_model,
-    covariance_from_stats,
-    fit_ridge_regression,
-    pca_fit,
-    pca_project,
-    vector_sufficient_stats,
-)
-from commerce_sessionization_spark.operators.legacy import (
-    augment_session_id_udf,
-    filter_date_hour,
-)
-from commerce_sessionization_spark.operators.merge import (
-    collapse_batch,
-    merge_upsert,
-    snapshot_diff,
-)
-from commerce_sessionization_spark.operators.rollup import (
-    merge_rollups,
-    time_bucket_rollup,
-)
-from commerce_sessionization_spark.operators.scd import scd2_history, snapshot_asof
-from commerce_sessionization_spark.operators.sketches import (
-    bloom_bits,
-    bloom_contains,
-)
+"""Operators, one module per family; import each from its defining module.
 
-__all__ = [
-    "augment_session_id",
-    "load_prev_active_sessions",
-    "sessionize_hour",
-    "sessionize",
-    "sessionize_capped",
-    "session_stats",
-    "divide_file",
-    "cdc_chunk_dedup",
-    "cdc_chunks",
-    "exact_dedup",
-    "exact_substring_decontaminate",
-    "filter_date_hour",
-    "fit_ridge_regression",
-    "covariance_from_stats",
-    "pca_fit",
-    "pca_project",
-    "vector_sufficient_stats",
-    "minhash_lsh_dedup_pairs",
-    "ngram_jaccard_pairs",
-    "prefix_jaccard_pairs",
-    "segment_dedup",
-    "exact_substring_dedup",
-    "hash_split",
-    "leakage_safe_split",
-    "mixture_waterfill",
-    "bottomk_sample",
-    "c4_line_filters",
-    "clean_text",
-    "cms_join_size_estimate",
-    "count_min_cells",
-    "count_min_estimates",
-    "grouped_histogram_quantiles",
-    "histogram_quantiles",
-    "histogram_sketch",
-    "sample_quantiles",
-    "simhash_dedup_candidates",
-    "simhash_table",
-    "apply_linear_model",
-    "asof_join",
-    "augment_session_id_udf",
-    "bloom_filtered_join",
-    "range_join",
-    "salted_join",
-    "all_pairs_topk",
-    "brute_force_topk",
-    "mmr_rerank",
-    "ivf_search_many",
-    "hard_negatives",
-    "embedding_dedup_pairs",
-    "ivf_assign",
-    "ivf_search",
-    "seed_centroids",
-    "sq_bounds",
-    "sq_encode",
-    "sq_topk",
-    "encoding_quality",
-    "gopher_quality_flags",
-    "html_features",
-    "readability",
-    "remove_boilerplate",
-    "strip_html",
-    "language_id",
-    "pii_scrub",
-    "quality_score",
-    "repetition_scores",
-    "with_fingerprint",
-    "with_text_stats",
-    "decontaminate",
-    "ngram_contamination",
-    "blocked_match_pairs",
-    "passjoin_segments",
-    "check_rules",
-    "blocking_key_audit",
-    "data_drift_psi",
-    "key_skew_stats",
-    "observed_write",
-    "profile_columns",
-    "join_delta",
-    "join_delta_z",
-    "as_zset",
-    "zset_normalize",
-    "apply_delta_z",
-    "zset_aggregate",
-    "merge_zset_aggregates",
-    "maintain_join",
-    "pagerank",
-    "triangle_counts",
-    "association_rules",
-    "crawl_to_corpus",
-    "extract_links",
-    "filter_by_robots",
-    "parse_robots_df",
-    "parse_sitemaps",
-    "sitemap_frontier_candidates",
-    "sitemaps_from_robots",
-    "canonical_url",
-    "dedup_by_canonical_url",
-    "url_parts",
-    "chunk_by_sentences",
-    "chunk_documents",
-    "bpe_train",
-    "bpe_segment",
-    "pack_sequences",
-    "pq_codebook",
-    "pq_encode",
-    "pq_adc_topk",
-    "pq_adc_multi",
-    "incremental_exact_dedup",
-    "detect_scene_cuts",
-    "extract_audio_features",
-    "extract_audio_mfcc",
-    "extract_audio_spectral",
-    "extract_container_metadata",
-    "extract_document_text",
-    "extract_image_features",
-    "extract_image_metadata",
-    "extract_video_frame_features",
-    "media_metadata_stats",
-    "phash_near_dup_pairs",
-    "resize_images",
-    "sample_video_frames",
-    "standardize_audio",
-    "collapse_batch",
-    "merge_upsert",
-    "snapshot_diff",
-    "hits",
-    "k_core",
-    "label_propagation",
-    "shortest_paths",
-    "weighted_shortest_paths",
-    "time_bucket_gapfill",
-    "ohlc_resample",
-    "ohlc_partial",
-    "merge_ohlc",
-    "candles_from_state",
-    "exp_smooth",
-    "holt_smooth",
-    "global_rank",
-    "shard_assignment",
-    "shard_manifest",
-    "write_shards",
-    "write_zordered",
-    "zorder_key",
-    "merge_rollups",
-    "time_bucket_rollup",
-    "scd2_history",
-    "snapshot_asof",
-    "bloom_bits",
-    "bloom_contains",
-    "augment_word_dropout",
-    "cross_doc_span_stats",
-    "k_anonymity_report",
-    "k_anonymize",
-    "l_diversity_report",
-    "laplace_noise",
-    "dp_noisy_counts",
-]
+The package itself exposes only the reference's two entry points: EP2
+``divide_file`` (raw CSV → hourly ``logs/``) and EP1 ``sessionize_hour``
+(one incremental hour → ``sessions/``). Importing it loads just those two
+modules and what they need, so a pandas worker that unpickles a function of
+``operators.sessions`` does not import every operator family.
+"""
+
+from commerce_sessionization_spark.operators.ingest import divide_file
+from commerce_sessionization_spark.operators.sessionize import sessionize_hour
+
+__all__ = ["divide_file", "sessionize_hour"]

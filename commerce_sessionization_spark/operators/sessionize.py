@@ -145,7 +145,6 @@ def sessionize_hour(
     event_date: str,
     event_hour: str,
     base_path: str,
-    sort_output: bool = True,
     write: bool = True,
 ) -> DataFrame:
     """EP1 — the hourly incremental job (``SessionizationBuiltIn.scala:25-65``).
@@ -162,10 +161,10 @@ def sessionize_hour(
     was written under the same gap rule), and the
     row just before the user's first new event is the one the per-session
     dedupe would keep. The ids are the same and the plan has a single
-    exchange, ``hashpartitioning(user_id)``. ``sort_output`` orders each
-    output file by time; the partition-column prefix of that sort satisfies
-    the write's required ordering, so Spark adds no sort of its own (which
-    would not keep the time order).
+    exchange, ``hashpartitioning(user_id)``. Each output file is ordered by
+    time; the partition-column prefix of that sort satisfies the write's
+    required ordering, so Spark adds no sort of its own (which would not keep
+    the time order).
     """
     process_time = datetime.strptime(f"{event_date} {event_hour}", "%Y-%m-%d %H")
     prev_time = process_time - timedelta(hours=1)
@@ -189,11 +188,9 @@ def sessionize_hour(
     unioned = carry_window(prev_sessions, process_time).unionByName(
         behaviors, allowMissingColumns=True
     )
-    sessions = augment_session_id(unioned, process_time, sort_output=False)
-    if sort_output:
-        sessions = sessions.sortWithinPartitions(
-            "event_date", "event_hour", "event_time"
-        )
+    sessions = augment_session_id(
+        unioned, process_time, sort_output=False
+    ).sortWithinPartitions("event_date", "event_hour", "event_time")
     if write:
         write_partitioned_parquet(
             sessions, f"{base_path}/sessions", cluster_before_write=False

@@ -1,12 +1,2 @@
-from commerce_sessionization_spark.plans.queries import (
-    CATALOG,
-    EXTENDED_CATALOG,
-    FULL_CATALOG,
-    all_spark_queries,
-    QueryDef,
-    oracle_queries,
-    spark_queries,
-)
-
-__all__ = ["CATALOG", "EXTENDED_CATALOG", "FULL_CATALOG", "QueryDef",
-           "all_spark_queries", "oracle_queries", "spark_queries"]
+"""Named queries: the catalog (``plans.queries``) behind ``bench.py`` and
+``__spark_entry__.py``."""

@@ -5717,9 +5717,14 @@ def q_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A purchase with no earlier touch in its session credits 'direct'.
     "Earlier" is the total order (ts, event_id), so ties are decided
-    identically in both engines. Shares divide IEEE doubles (one
-    bit-deterministic operation per row), are snapped to DECIMAL(18,6),
-    and accumulate exactly — the per-type totals are order-independent.
+    identically in both engines. Shares are exact integer arithmetic: the
+    value is rounded once to micro-units (``round(value * 1e6)``, an exact
+    integer in both engines), each share is that integer over the touch
+    count rounded half away from zero, and the shares sum as integers, so
+    the per-type totals are order-independent. A double quotient cast to
+    DECIMAL would not do: DuckDB scales the double before rounding, so a
+    near-half share (139.17 / 96 = 1.4496874999999998) rounds up there and
+    down in Spark.
 
     Scale shape: purchases join touches on ``session_id`` — a
     high-cardinality uniform key — and the within-session pair blow-up is
@@ -5749,11 +5754,17 @@ def q_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_credit", F.when(earlier, F.col("_t_type"))
     )
     n_w = Window.partitionBy("_p_id")
-    credited = pairs.withColumn("_n", F.count("_credit").over(n_w)).withColumn(
-        "_share",
-        F.when(F.col("_n") == 0, F.col("_p_value")).otherwise(
-            F.col("_p_value") / F.col("_n")
-        ),
+    credited = (
+        pairs.withColumn("_n", F.count("_credit").over(n_w))
+        .withColumn("_v", F.round(F.col("_p_value") * F.lit(1e6)).cast("long"))
+        .withColumn(
+            "_share_u",
+            F.expr(
+                "CASE WHEN _n = 0 THEN _v"
+                " WHEN _v < 0 THEN -((2 * -_v + _n) div (2 * _n))"
+                " ELSE (2 * _v + _n) div (2 * _n) END"
+            ),
+        )
     )
     # n == 0 → the (possibly null-joined) rows collapse to one 'direct'
     # credit; n > 0 → only rows that actually matched an earlier touch.
@@ -5774,9 +5785,9 @@ def q_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("channel")
         .agg(
-            F.sum(F.col("_share").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("attributed_revenue"),
+            (F.sum("_share_u").cast("double") / F.lit(1e6)).alias(
+                "attributed_revenue"
+            ),
             F.countDistinct("_p_id").alias("n_purchases"),
         )
     )
@@ -5799,15 +5810,19 @@ SQL_LINEAR_ATTRIBUTION = _SESSION_CTE + """
          row_number() OVER (PARTITION BY p_id ORDER BY t_id ASC NULLS FIRST)
            AS rn
   FROM pairs
+), micro AS (
+  SELECT *, CAST(round(p_value * 1e6) AS BIGINT) AS v FROM counted
 ), credited AS (
   SELECT CASE WHEN n > 0 THEN credit ELSE 'direct' END AS channel,
-         CASE WHEN n = 0 THEN p_value ELSE p_value / n END AS share,
+         CASE WHEN n = 0 THEN v
+              WHEN v < 0 THEN -((2 * -v + n) // (2 * n))
+              ELSE (2 * v + n) // (2 * n) END AS share_u,
          p_id
-  FROM counted
+  FROM micro
   WHERE (n > 0 AND credit IS NOT NULL) OR (n = 0 AND rn = 1)
 )
 SELECT channel,
-       CAST(sum(CAST(share AS DECIMAL(18,6))) AS DOUBLE) AS attributed_revenue,
+       CAST(sum(share_u) AS DOUBLE) / 1e6 AS attributed_revenue,
        count(DISTINCT p_id) AS n_purchases
 FROM credited GROUP BY channel
 """

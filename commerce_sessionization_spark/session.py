@@ -16,6 +16,10 @@ we centralize it so every entry point gets the same scale-hardened config:
   vectorized reader rejects; we read nanos as long and convert explicitly
   (see ``sources.tables``).
 - **Arrow** — pandas UDF exchange is Arrow-batched.
+- **ANSI mode** — overflowing casts and arithmetic raise instead of
+  returning NULL (e.g. the exact-decimal PageRank and sufficient-stats
+  paths). Spark 4 defaults to it; pinned so a cluster default cannot turn
+  an overflow into a silent NULL.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -9,31 +9,3 @@ variant is the package's one arbitrary-state operator and runs on
 ``applyInPandasWithState``: a per-user update function over one
 ``(start, last)`` state row.
 """
-
-from commerce_sessionization_spark.streaming.cdc_stream import (
-    make_cdc_writer,
-    read_cdc_snapshot,
-)
-from commerce_sessionization_spark.streaming.dedup import dedup_stream
-from commerce_sessionization_spark.streaming.joins import (
-    attribute_purchases,
-    enrich_stream,
-)
-from commerce_sessionization_spark.streaming.sessionize_stream import (
-    read_events_stream,
-    sessionize_stream_stateful,
-    sessionize_stream_window,
-)
-from commerce_sessionization_spark.streaming.windows import windowed_counts
-
-__all__ = [
-    "attribute_purchases",
-    "dedup_stream",
-    "make_cdc_writer",
-    "read_cdc_snapshot",
-    "enrich_stream",
-    "read_events_stream",
-    "sessionize_stream_stateful",
-    "sessionize_stream_window",
-    "windowed_counts",
-]

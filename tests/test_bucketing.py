@@ -13,7 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from commerce_sessionization_spark.sources import write_bucketed_table
+from commerce_sessionization_spark.sources.io import write_bucketed_table
 from commerce_sessionization_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"

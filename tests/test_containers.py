@@ -340,7 +340,7 @@ def media_corpus(spark):
 
 
 def test_extract_container_metadata_operator(spark, media_corpus):
-    from commerce_sessionization_spark.operators import (
+    from commerce_sessionization_spark.operators.multimodal import (
         extract_container_metadata,
     )
 
@@ -362,7 +362,7 @@ def test_extract_container_metadata_operator(spark, media_corpus):
 
 
 def test_extract_container_metadata_tags_column(spark):
-    from commerce_sessionization_spark.operators import (
+    from commerce_sessionization_spark.operators.multimodal import (
         extract_container_metadata,
     )
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
@@ -393,7 +393,7 @@ def test_extract_container_metadata_tags_column(spark):
 
 
 def test_sample_video_frames_mp4_sync_samples(spark, media_corpus):
-    from commerce_sessionization_spark.operators import sample_video_frames
+    from commerce_sessionization_spark.operators.multimodal import sample_video_frames
 
     payload, vid, _ = _demo_mp4()
     rows = sample_video_frames(

@@ -146,7 +146,7 @@ def test_extract_image_features_skip_mode(spark):
     import numpy as np
 
     from commerce_sessionization_spark.functions.codecs import encode_bmp
-    from commerce_sessionization_spark.operators import extract_image_features
+    from commerce_sessionization_spark.operators.multimodal import extract_image_features
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
 
     img = np.zeros((4, 6, 3), dtype=np.uint8)
@@ -169,7 +169,7 @@ def test_image_features_skip_mode_survives_struct_error(spark):
     import numpy as np
 
     from commerce_sessionization_spark.functions.codecs import encode_bmp
-    from commerce_sessionization_spark.operators import extract_image_features
+    from commerce_sessionization_spark.operators.multimodal import extract_image_features
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
 
     bad_tiff = (
@@ -194,7 +194,7 @@ def test_sample_video_frames_moovless_mp4_contract(spark):
     branch."""
     import pytest
 
-    from commerce_sessionization_spark.operators import sample_video_frames
+    from commerce_sessionization_spark.operators.multimodal import sample_video_frames
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
 
     moovless = struct.pack(">I", 16) + b"ftypisom" + b"\x00\x00\x02\x00"
@@ -215,7 +215,7 @@ def test_extract_document_text_encrypted_zip_never_fails_pass(spark):
     import io
     import zipfile
 
-    from commerce_sessionization_spark.operators import extract_document_text
+    from commerce_sessionization_spark.operators.multimodal import extract_document_text
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
 
     bio = io.BytesIO()

@@ -105,7 +105,7 @@ def test_png_metadata_real_host_files():
 
 
 def test_extract_image_metadata_operator(spark):
-    from commerce_sessionization_spark.operators import extract_image_metadata
+    from commerce_sessionization_spark.operators.multimodal import extract_image_metadata
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
 
     jpeg_exif = build_jpeg_with_exif(
@@ -167,7 +167,7 @@ def test_standalone_tiff_roundtrip(big_endian):
 def test_extract_image_metadata_avif_and_tiff(spark):
     from commerce_sessionization_spark.functions.containers import build_avif
     from commerce_sessionization_spark.functions.metadata import build_tiff
-    from commerce_sessionization_spark.operators import extract_image_metadata
+    from commerce_sessionization_spark.operators.multimodal import extract_image_metadata
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
 
     rows = [

@@ -23,7 +23,7 @@ from commerce_sessionization_spark.operators.multimodal import (
     extract_image_features,
     sample_video_frames,
 )
-from commerce_sessionization_spark.sources import read_media_dir
+from commerce_sessionization_spark.sources.io import read_media_dir
 
 
 @pytest.fixture(scope="module")

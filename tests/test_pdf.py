@@ -82,8 +82,8 @@ def test_pdf_cid_font_flagged():
 def test_extract_document_text_operator(spark, tmp_path):
     """Files on disk -> read_media_dir -> extract_document_text: the
     document leg end-to-end, including the never-fails contract."""
-    from commerce_sessionization_spark.operators import extract_document_text
-    from commerce_sessionization_spark.sources import read_media_dir
+    from commerce_sessionization_spark.operators.multimodal import extract_document_text
+    from commerce_sessionization_spark.sources.io import read_media_dir
 
     d = tmp_path / "docs"
     d.mkdir()
@@ -147,7 +147,7 @@ def test_docx_contract_errors():
 
 def test_extract_document_text_handles_docx(spark):
     from commerce_sessionization_spark.functions.docx import build_docx
-    from commerce_sessionization_spark.operators import extract_document_text
+    from commerce_sessionization_spark.operators.multimodal import extract_document_text
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
 
     rows = [
@@ -170,7 +170,7 @@ def test_extract_document_text_handles_docx(spark):
 
 
 def test_extract_document_text_plain_and_markdown(spark):
-    from commerce_sessionization_spark.operators import extract_document_text
+    from commerce_sessionization_spark.operators.multimodal import extract_document_text
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
 
     rows = [

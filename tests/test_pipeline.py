@@ -12,10 +12,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from commerce_sessionization_spark.operators import divide_file, sessionize_hour
+from commerce_sessionization_spark.operators.ingest import divide_file
+from commerce_sessionization_spark.operators.sessionize import sessionize_hour
 from commerce_sessionization_spark.operators.sessions import sessionize
 from commerce_sessionization_spark.schemas import BEHAVIOR_SCHEMA, SESSION_SCHEMA
-from commerce_sessionization_spark.sources import read_parquet
+from commerce_sessionization_spark.sources.io import read_parquet
 from commerce_sessionization_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -145,7 +146,7 @@ def test_source_sink_roundtrip_all_formats(spark, tmp_path, fmt):
         StructType,
     )
 
-    from commerce_sessionization_spark.sources import read_source, write_partitioned
+    from commerce_sessionization_spark.sources.io import read_source, write_partitioned
 
     schema = StructType(
         [
@@ -198,7 +199,7 @@ class TestPermissiveIngest:
         return StructType([StructField(n, types[t]) for n, t in self.SCHEMA_COLS])
 
     def test_csv_bad_rows_quarantined_not_fatal(self, spark, tmp_path):
-        from commerce_sessionization_spark.sources import (
+        from commerce_sessionization_spark.sources.io import (
             read_source_permissive, split_corrupt,
         )
         p = tmp_path / "in"
@@ -214,7 +215,7 @@ class TestPermissiveIngest:
         assert raw == ["not-a-number,bob,oops"]  # raw line kept verbatim
 
     def test_json_bad_rows_quarantined(self, spark, tmp_path):
-        from commerce_sessionization_spark.sources import (
+        from commerce_sessionization_spark.sources.io import (
             read_source_permissive, split_corrupt,
         )
         p = tmp_path / "inj"

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import glob
 import hashlib
-import importlib
 import os
 import re
 import tempfile
@@ -25,13 +24,11 @@ from hypothesis import strategies as st
 
 from pyspark.errors import AnalysisException
 
-from commerce_sessionization_spark.operators import divide_file, sessionize_hour
+from commerce_sessionization_spark.operators.ingest import divide_file
+import commerce_sessionization_spark.operators.sessionize as sessionize_mod
+from commerce_sessionization_spark.operators.sessionize import sessionize_hour
 from commerce_sessionization_spark.schemas import BEHAVIOR_SCHEMA, SESSION_SCHEMA
-from commerce_sessionization_spark.sources import read_parquet
-
-# the package re-exports a ``sessionize`` function under the module's name
-sessionize_mod = importlib.import_module(
-    "commerce_sessionization_spark.operators.sessionize")
+from commerce_sessionization_spark.sources.io import read_parquet
 
 #: The chain's first hour; a 3- or 4-hour chain crosses midnight.
 T0 = datetime(2024, 3, 9, 22)

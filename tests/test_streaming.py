@@ -26,7 +26,7 @@ from pyspark.sql.types import (
 )
 
 from commerce_sessionization_spark.operators.sessions import sessionize
-from commerce_sessionization_spark.streaming import (
+from commerce_sessionization_spark.streaming.sessionize_stream import (
     read_events_stream,
     sessionize_stream_stateful,
     sessionize_stream_window,

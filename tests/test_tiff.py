@@ -74,7 +74,7 @@ def test_tiff_contract_errors():
 
 
 def test_image_features_dispatches_tiff(spark):
-    from commerce_sessionization_spark.operators import extract_image_features
+    from commerce_sessionization_spark.operators.multimodal import extract_image_features
     from commerce_sessionization_spark.schemas import MEDIA_SCHEMA
 
     rows = [
